@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
@@ -45,24 +45,20 @@ object Bench {
       name: String): Double =
     priorMins.get(name).map(clampFloor).getOrElse(4.0)
 
+  /** Runs `df` to completion into the `noop` sink: every operator
+    * materializes, nothing is written. */
+  private[graft] def sink(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Untimed session warm-up: one shuffle + one codegen'd agg. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    sink(spark.read.parquet(s"$sfDir/nation.parquet")
+      .groupBy("n_regionkey").count())
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // session warmup: one shuffle + one codegen'd agg, untimed
-    spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count()
-      .write.format("noop").mode("overwrite").save()
+    val spark = LocalSession()
+    warmUp(spark, sfDir)
 
     // three timed executions per query, min reported: the first run carries
     // one-off planning/codegen-compile cost, and ambient machine load can
@@ -113,7 +109,7 @@ object Bench {
       if (idx % 10 == 0) System.gc()
       def timeOnce(): Double = {
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try sink(fn(spark, sfDir))
         catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
         (System.nanoTime() - t0) / 1e9
       }
@@ -140,7 +136,7 @@ object Bench {
       // min-of-3, steady spread 1.6 so the spread rule never fired; the
       // judge's re-run on the same commit read 1.6 s). A consistently-slow
       // plan variant warms out within a few more executions when the cause
-      // is a cold C2 tier (Q44Probe: spike-free once warm), while genuine
+      // is a cold C2 tier (q44 probed spike-free once warm), while genuine
       // sustained interference keeps the extra runs slow and the min
       // honestly stays high. The floor tracks the committed profile
       // PER QUERY (2× this query's own prior min, via the sidecar)
@@ -174,7 +170,7 @@ object Bench {
     val (worstQ, worstSpread) =
       if (spreads.isEmpty) ("", 1.0) else spreads.maxBy(_._2)
     val nOver3 = spreads.count(_._2 > 3.0)
-    val contaminated = nOver3 > 0 || loadStart > cpus.toInt * 1.5
+    val contaminated = nOver3 > 0 || loadStart > LocalSession.cpus * 1.5
     // The driver parses this line out of a bounded tail of the process
     // output (last ~2000 chars, after sbt's own [success] footer), so the
     // line must stay compact: 2-decimal seconds, emitted after spark.stop()

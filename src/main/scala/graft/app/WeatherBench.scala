@@ -94,17 +94,7 @@ object WeatherBench {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("graft_weather_bench").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     generateWeatherCsv(spark, s"$work/weather_csv")
     generateLocationsCsv(spark, s"$work/locations_csv")

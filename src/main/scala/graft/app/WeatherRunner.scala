@@ -123,14 +123,8 @@ object WeatherRunner {
 
   def main(args: Array[String]): Unit = {
     val Array(weatherCsv, locationsCsv, outDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(
+      sys.env.getOrElse("SPARK_MASTER", graft.LocalSession.master))
     runAll(spark, weatherCsv, locationsCsv, outDir).toSeq.sortBy(_._1)
       .foreach { case (t, n) => println(f"$t%-32s $n%8d rows") }
     spark.stop()

@@ -244,8 +244,9 @@ object PublicSuffix {
   private def ruleCount(rules: Rules): Int =
     rules.exact.size + rules.wildcardBase.size + rules.exception.size
 
-  /** Measured compiled-vs-dim selection bound (graft.tools.PslProfile,
-    * local[32], 1M hosts across 10 suffix families, min-of-5; README
+  /** Measured compiled-vs-dim selection bound (graft.tools.PslProfile, a
+    * one-off tool since removed, in git history at 86affbe; local[32],
+    * 1M hosts across 10 suffix families, min-of-5; README
     * "PSL evaluator selection"): there is NO crossover at real list
     * sizes — the compiled CASE chain's per-row cost is flat in rule
     * count (isin literals hash to InSet) and it beats the broadcast-dim

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   * consumers.
   *
   * Two installation paths:
-  *  - builder-time: `SparkSession.builder.withExtensions(new GraftExtensions)`
-  *    or `spark.sql.extensions=graft.plans.GraftExtensions`;
+  *  - builder-time: `spark.sql.extensions=graft.plans.GraftExtensions`, as
+  *    [[graft.LocalSession]] sets it, or `withExtensions(new GraftExtensions)`;
   *  - live session: `GraftExtensions.register(spark)` (temp functions).
   */
 object GraftExtensions {

@@ -551,17 +551,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxK = if (args.length > 1) args(1).toInt else 8
     val outFile = if (args.length > 2) Some(args(2)) else None
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
 
     val base = graft.Tables.documents(spark, sfDir)
     val baseEmb = graft.Tables.embeddings(spark, sfDir)

@@ -1,6 +1,4 @@
-package graft.tools
-
-import org.apache.spark.sql.SparkSession
+package graft
 
 /** Child-process half of the cross-process writer-lock law
   * (StoreLifecycleSpec): acquires [[graft.operators.Generations]]'
@@ -9,15 +7,12 @@ import org.apache.spark.sql.SparkSession
   * JVM, not a simulated foreign lock file), touches a sentinel file so
   * the parent knows the lock is held, then holds it for `holdMs`.
   *
-  * `runMain graft.tools.LockHold <storeDir> <sentinelFile> <holdMs>`
+  * `java -cp <test class path> graft.LockHold <storeDir> <sentinelFile> <holdMs>`
   */
 object LockHold {
   def main(args: Array[String]): Unit = {
     val Array(storeDir, sentinel, holdMs) = args
-    val spark = SparkSession.builder()
-      .master("local[1]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("local[1]")
     spark.sparkContext.setLogLevel("ERROR")
     graft.operators.Generations.withWriterLock(spark, storeDir) {
       java.nio.file.Files.writeString(

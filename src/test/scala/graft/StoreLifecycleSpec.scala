@@ -216,7 +216,7 @@ class StoreLifecycleSpec extends AnyFunSuite {
       case Array(f, v) if f == "--add-opens" => Seq(f, v)
     }.flatten.toSeq
     val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g", "-cp",
-      System.getProperty("java.class.path"), "graft.tools.LockHold",
+      System.getProperty("java.class.path"), "graft.LockHold",
       dir, sentinel, "180000")
     val proc = new ProcessBuilder(cmd: _*)
       .redirectOutput(ProcessBuilder.Redirect.DISCARD)

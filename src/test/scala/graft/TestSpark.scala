@@ -3,30 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites (spark_guide.md: per-suite
-  * lazy val, never per-test). Config mirrors Verify/Bench.
+  * lazy val, never per-test), built like Verify/Bench's.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata timestamps are tz-naive parquet timestamp[us]; read them as
-      // LTZ instants in the UTC session (not NTZ — watermarks and unix_*()
-      // require TIMESTAMP, and the DuckDB oracle does naive-as-UTC math)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // per-JVM warehouse: managed-table tests never collide with leftovers
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(extra = Map(
+    "spark.app.name" -> "graft-test",
+    // per-JVM warehouse: managed-table tests never collide with leftovers
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
 
   val sf0001 = "/root/testdata/sf0.001"
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Merge fresh-JVM isolation timings (BenchIsolate JSONL) with the
-in-suite records into BENCH_ISOLATED_r{N}.json — the attribution
-artifact for suite-position effects (VERDICT r14 finding #1).
+"""Merge fresh-JVM isolation timings (`graft.tools.Probe profile` JSONL,
+one sbt runMain per query) with the in-suite records into
+BENCH_ISOLATED_r{N}.json — the attribution artifact for suite-position
+effects (VERDICT r14 finding #1).
 
 Usage: merge_isolation.py <jsonl> <out.json> <round> <builder-ref> <driver-ref>
 Reads in-suite minima from the two named git refs' BENCH_DETAIL.json;
@@ -47,7 +48,7 @@ def main():
         }
     doc = {
         "round": rnd,
-        "what": "fresh-JVM min-of-N per query (graft.tools.BenchIsolate, "
+        "what": "fresh-JVM min-of-N per query (graft.tools.Probe profile, "
                 "one sbt runMain = one JVM) vs the named refs' in-suite "
                 "records",
         "builder_ref": sys.argv[4],
