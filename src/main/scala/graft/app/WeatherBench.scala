@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   * Generates a deterministic fixture with the reference corpus's exact
   * shape — 26 districts × daily 2010–2024 = 142,454 rows, unit-suffixed
   * headers, non-padded `M/d/yyyy` dates, ~0.1 % malformed numeric rows —
-  * then times one `WeatherRunner.runAll`. Prints one JSON line.
+  * then times one `WeatherRunner.runAll`. Prints one JSON line:
+  * `value` is the timed region's wall; `pipelines` holds the per-table
+  * walls from `WeatherRunner.runAllTimed`. The nine tables are written
+  * concurrently, so those walls overlap and do not sum to `value`.
   *
   * `runMain graft.app.WeatherBench [workDir]`
   */

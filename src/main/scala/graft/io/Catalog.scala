@@ -32,9 +32,15 @@ object Catalog {
   private def str(value: String): String =
     "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  /** `CREATE DATABASE IF NOT EXISTS` + `USE` (01_create_tables.hql:7-8). */
-  def useDatabase(spark: SparkSession, name: String): Unit = {
+  /** `CREATE DATABASE IF NOT EXISTS` (01_create_tables.hql:7); the
+    * session's current database is left as it is.
+    */
+  def createDatabase(spark: SparkSession, name: String): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ident(name)}")
+
+  /** [[createDatabase]] + `USE` (01_create_tables.hql:7-8). */
+  def useDatabase(spark: SparkSession, name: String): Unit = {
+    createDatabase(spark, name)
     spark.sql(s"USE ${ident(name)}")
   }
 
@@ -42,12 +48,16 @@ object Catalog {
     * `CREATE EXTERNAL TABLE ... ROW FORMAT DELIMITED ... TBLPROPERTIES
     * ('skip.header.line.count'='1')` analog (01_create_tables.hql:13-28):
     * USING csv + header option is the Spark-native spelling of both.
+    * With `database` the table is created there (each part quoted as its
+    * own identifier) instead of in the session's current database.
     */
   def createExternalCsv(spark: SparkSession, name: String, path: String,
-      schema: StructType, header: Boolean = true, sep: String = ","): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ident(name)}")
+      schema: StructType, header: Boolean = true, sep: String = ",",
+      database: Option[String] = None): Unit = {
+    val table = (database.toSeq :+ name).map(ident).mkString(".")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"""
-      CREATE TABLE ${ident(name)} (${schema.toDDL})
+      CREATE TABLE $table (${schema.toDDL})
       USING csv
       OPTIONS (header '$header', sep ${str(sep)}, path ${str(path)})""")
   }

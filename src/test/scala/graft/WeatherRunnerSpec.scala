@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class WeatherRunnerSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("runAll produces the full result-table catalog from raw CSVs") {
+  /** A temp dir holding `weather.csv` (3 rows) and `locations.csv` (2). */
+  private def fixture(): String = {
     val dir = Files.createTempDirectory("graft_runner").toString
     Files.writeString(java.nio.file.Path.of(s"$dir/weather.csv"),
       """location_id,date,weather_code (wmo code),temperature_2m_max (°C),temperature_2m_min (°C),temperature_2m_mean (°C),apparent_temperature_max (°C),apparent_temperature_min (°C),apparent_temperature_mean (°C),daylight_duration (s),sunshine_duration (s),precipitation_sum (mm),rain_sum (mm),precipitation_hours (h),wind_speed_10m_max (km/h),wind_gusts_10m_max (km/h),wind_direction_10m_dominant (°),shortwave_radiation_sum (MJ/m²),et0_fao_evapotranspiration (mm),sunrise,sunset
@@ -23,7 +24,15 @@ class WeatherRunnerSpec extends AnyFunSuite {
         |1,6.93,79.85,8.0,19800,Asia/Colombo,+0530,Colombo
         |2,7.29,80.63,500.0,19800,Asia/Colombo,+0530,Kandy
         |""".stripMargin)
+    dir
+  }
 
+  /** No plan is cached anywhere in the session's shared state. */
+  private def cacheIsEmpty = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    .sharedState.cacheManager.isEmpty
+
+  test("runAll produces the full result-table catalog from raw CSVs") {
+    val dir = fixture()
     val counts = WeatherRunner.runAll(spark,
       s"$dir/weather.csv", s"$dir/locations.csv", s"$dir/out")
 
@@ -48,5 +57,35 @@ class WeatherRunnerSpec extends AnyFunSuite {
     def rows(t: String) = spark.read.parquet(s"$dir/out/$t")
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
     assert(rows("top_temperate_cities_hql") === rows("top_temperate_cities"))
+  }
+
+  test("runAll leaves the session's current database as it found it") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS weather_runner_caller")
+    spark.sql("USE weather_runner_caller")
+    try {
+      val dir = fixture()
+      WeatherRunner.runAll(spark, s"$dir/weather.csv", s"$dir/locations.csv", s"$dir/out")
+      assert(spark.catalog.currentDatabase === "weather_runner_caller")
+    } finally {
+      spark.sql("USE default")
+      spark.sql("DROP DATABASE IF EXISTS weather_runner_caller")
+    }
+  }
+
+  test("runAll releases every materialization it makes: nothing is cached across runs") {
+    spark.catalog.clearCache() // start from an empty cache, whatever ran before
+    val dir = fixture()
+    WeatherRunner.runAll(spark, s"$dir/weather.csv", s"$dir/locations.csv", s"$dir/out")
+    assert(cacheIsEmpty)
+  }
+
+  test("a failed table write propagates and still releases the materializations") {
+    spark.catalog.clearCache()
+    val dir = fixture()
+    val notADir = Files.writeString(java.nio.file.Path.of(s"$dir/out"), "a regular file")
+    intercept[Exception] {
+      WeatherRunner.runAll(spark, s"$dir/weather.csv", s"$dir/locations.csv", notADir.toString)
+    }
+    assert(cacheIsEmpty)
   }
 }
