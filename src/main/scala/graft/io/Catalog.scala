@@ -32,15 +32,9 @@ object Catalog {
   private def str(value: String): String =
     "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  /** `CREATE DATABASE IF NOT EXISTS` (01_create_tables.hql:7); the
-    * session's current database is left as it is.
-    */
-  def createDatabase(spark: SparkSession, name: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ident(name)}")
-
-  /** [[createDatabase]] + `USE` (01_create_tables.hql:7-8). */
+  /** `CREATE DATABASE IF NOT EXISTS` + `USE` (01_create_tables.hql:7-8). */
   def useDatabase(spark: SparkSession, name: String): Unit = {
-    createDatabase(spark, name)
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ident(name)}")
     spark.sql(s"USE ${ident(name)}")
   }
 
@@ -48,19 +42,27 @@ object Catalog {
     * `CREATE EXTERNAL TABLE ... ROW FORMAT DELIMITED ... TBLPROPERTIES
     * ('skip.header.line.count'='1')` analog (01_create_tables.hql:13-28):
     * USING csv + header option is the Spark-native spelling of both.
-    * With `database` the table is created there (each part quoted as its
-    * own identifier) instead of in the session's current database.
     */
   def createExternalCsv(spark: SparkSession, name: String, path: String,
-      schema: StructType, header: Boolean = true, sep: String = ",",
-      database: Option[String] = None): Unit = {
-    val table = (database.toSeq :+ name).map(ident).mkString(".")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"""
-      CREATE TABLE $table (${schema.toDDL})
-      USING csv
-      OPTIONS (header '$header', sep ${str(sep)}, path ${str(path)})""")
+      schema: StructType, header: Boolean = true, sep: String = ","): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS ${ident(name)}")
+    spark.sql(s"CREATE TABLE ${ident(name)} ${csvSource(path, schema, header, sep)}")
   }
+
+  /** [[createExternalCsv]] as a temporary view: the same DDL, but the name
+    * is bound in this session only, not in the shared catalog, so another
+    * session on the same catalog can bind it to other files at the same
+    * time.
+    */
+  def createTempCsv(spark: SparkSession, name: String, path: String,
+      schema: StructType, header: Boolean = true, sep: String = ","): Unit =
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${ident(name)} " +
+      csvSource(path, schema, header, sep))
+
+  private def csvSource(path: String, schema: StructType, header: Boolean,
+      sep: String): String =
+    s"(${schema.toDDL}) USING csv " +
+      s"OPTIONS (header '$header', sep ${str(sep)}, path ${str(path)})"
 
   /** External parquet table over `path` (schema from the footers). */
   def createExternalParquet(spark: SparkSession, name: String, path: String): Unit = {

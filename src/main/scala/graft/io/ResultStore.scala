@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{ExecutionContext, Future}
 
 /** Result-table store re-expressing the reference's two sink dialects
   * (SURVEY.md §2.1):
@@ -25,6 +26,19 @@ object ResultStore {
   /** Overwrite-dialect write (idempotent full refresh). */
   def overwrite(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** [[overwrite]], returning the number of rows written. The write counts
+    * them itself through an observed metric, so no job re-reads the table.
+    * The count reaches the session's listeners just after the write
+    * returns, hence the future: whatever only needs the stored table can
+    * start without waiting for it. The observation is unnamed, so
+    * concurrent writes on one session keep their counts apart.
+    */
+  def overwriteCounted(df: DataFrame, path: String): Future[Long] = {
+    val written = Observation()
+    overwrite(df.observe(written, count(lit(1)).as("rows")), path)
+    written.future.map(_.getLong(0))(ExecutionContext.parasitic)
+  }
 
   /** Append one run folder: `<base>/run_id=<runId>/`. Fails if the run
     * already exists (exactly-once per run id).

@@ -2,8 +2,10 @@ package graft.tools
 
 import graft.{Bench, LocalSession, SparkEntry}
 import graft.functions.HostStats
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -20,9 +22,13 @@ import java.nio.file.{Files, Paths}
   * `plan_s` (analysis, optimization and physical planning of the sink
   * write, from that write's own planning tracker) and `exec_s` (the rest),
   * with the jobs, completed stages, tasks, summed task seconds and shuffle
-  * MB written of the whole run. Each completed stage prints one line to
-  * stderr. Run once per query, each in a fresh JVM, its lines are the
-  * isolation timings `tools/merge_isolation.py` merges.
+  * MB written of the whole run, and the classes Spark's code generator
+  * compiled during it (`codegen_compiles`, the growth of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`'s count) and the seconds spent
+  * compiling them (`codegen_s`): a warm query that still compiles has
+  * outgrown the generated-class cache. Each completed stage prints one
+  * line to stderr. Run once per query, each in a fresh JVM, its lines are
+  * the isolation timings `tools/merge_isolation.py` merges.
   *
   * `runMain graft.tools.Probe explain <q1,q2,...|all> [sfDir] [outDir]`:
   * each query's formatted physical plan (not executed), on stdout or as
@@ -32,7 +38,7 @@ object Probe {
 
   private final case class Run(wall: Double, build: Double, plan: Double,
       jobs: Int, stages: Int, tasks: Int, taskSec: Double,
-      shuffleWriteMb: Double) {
+      shuffleWriteMb: Double, compiles: Long, codegenSec: Double) {
     def exec: Double = wall - build - plan
   }
 
@@ -65,6 +71,11 @@ object Probe {
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = planned(qe)
   }
 
+  /** JVM-wide totals so far: generated classes compiled, and nanoseconds
+    * spent compiling them (both counted at each compile, by Spark). */
+  private def codegen: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   /** Times `iters` runs of one query; returns its JSON line. */
   def profile(spark: SparkSession, name: String, sfDir: String,
       iters: Int): String = {
@@ -78,6 +89,7 @@ object Probe {
       val runs = (1 to iters).map { _ =>
         Bridge.drain(sc)
         tap.reset()
+        val (compiles0, codegenNs0) = codegen
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -85,8 +97,10 @@ object Probe {
         val t2 = System.nanoTime()
         // the write's own execution is the last to finish
         Bridge.drain(sc)
+        val (compiles1, codegenNs1) = codegen
         Run((t2 - t0) / 1e9, (t1 - t0) / 1e9, tap.planMs / 1e3, tap.jobs,
-          tap.stages, tap.tasks, tap.taskMs / 1e3, tap.shuffleBytes / 1e6)
+          tap.stages, tap.tasks, tap.taskMs / 1e3, tap.shuffleBytes / 1e6,
+          compiles1 - compiles0, (codegenNs1 - codegenNs0) / 1e9)
       }
       val ld1 = HostStats.loadAvg1
       val r = runs.minBy(_.wall)
@@ -95,7 +109,8 @@ object Probe {
         runs.map(x => f(x.wall)).mkString(",")}],"ld":[${f(ld0)},${f(ld1)}],""" +
         s""""build_s":${f(r.build)},"plan_s":${f(r.plan)},"exec_s":${f(r.exec)},""" +
         s""""jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks},""" +
-        s""""task_s":${f(r.taskSec)},"shuffle_write_mb":${f(r.shuffleWriteMb)}}"""
+        s""""task_s":${f(r.taskSec)},"shuffle_write_mb":${f(r.shuffleWriteMb)},""" +
+        s""""codegen_compiles":${r.compiles},"codegen_s":${f(r.codegenSec)}}"""
     } finally {
       spark.listenerManager.unregister(tap)
       sc.removeSparkListener(tap)

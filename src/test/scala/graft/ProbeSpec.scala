@@ -4,8 +4,9 @@ import graft.tools.Probe
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Probe profile`'s line: the layer split adds up to the timed wall, and
-  * the fields `tools/merge_isolation.py` reads are there. */
+/** `Probe profile`'s line: the layer split adds up to the timed wall, the
+  * codegen figures are there, and so are the fields
+  * `tools/merge_isolation.py` reads. */
 class ProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -33,5 +34,7 @@ class ProbeSpec extends AnyFunSuite {
     assert(math.abs(layers.sum - min) <= 0.05 * min, line)
     Seq("stages", "tasks", "task_s", "shuffle_write_mb")
       .foreach(f => assert(!r.isNullAt(r.fieldIndex(f)), f))
+    assert(r.getAs[Long]("codegen_compiles") >= 0, line)
+    assert(r.getAs[Double]("codegen_s") >= 0, line)
   }
 }
