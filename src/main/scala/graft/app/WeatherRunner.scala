@@ -1,7 +1,7 @@
 package graft.app
 
 import graft.analytics.WeatherAnalytics
-import graft.io.{Catalog, CsvIngest, ResultStore}
+import graft.io.{CsvIngest, ResultStore}
 import java.util.concurrent.{Executors, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
@@ -63,7 +63,10 @@ object WeatherRunner {
     * its script's `USE weather_analytics` (plus the deterministic city
     * tie-break, intentional deviation #1). Bad rows arrive as nulls and are
     * filtered by the query's own IS NOT NULL — exactly how the Hive path
-    * behaves.
+    * behaves. Columns bind by header name ([[CsvIngest.readCsvByHeader]],
+    * the mapping the ingest uses), so a CSV whose columns come in another
+    * order, or with unit-suffixed headers, feeds the query the same
+    * fields.
     *
     * The two tables are temporary views of a child session, so each call
     * reads its own CSVs even while another call on the same session binds
@@ -75,11 +78,11 @@ object WeatherRunner {
     */
   def runSqlSurface(spark: SparkSession, weatherCsv: String,
       locationsCsv: String): DataFrame = {
-    val hiveWeatherSchema = StructType(weatherSchema.map(f =>
-      if (f.name == "date") f.copy(name = "dt") else f))
     val surface = Bridge.childSession(spark)
-    Catalog.createTempCsv(surface, "weather_data", weatherCsv, hiveWeatherSchema)
-    Catalog.createTempCsv(surface, "location_data", locationsCsv, locationSchema)
+    CsvIngest.readCsvByHeader(surface, weatherCsv, weatherSchema)
+      .withColumnRenamed("date", "dt").createOrReplaceTempView("weather_data")
+    CsvIngest.readCsvByHeader(surface, locationsCsv, locationSchema)
+      .createOrReplaceTempView("location_data")
     Bridge.adopt(spark, surface.sql("""
       SELECT
           l.city_name,

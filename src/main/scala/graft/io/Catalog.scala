@@ -46,23 +46,9 @@ object Catalog {
   def createExternalCsv(spark: SparkSession, name: String, path: String,
       schema: StructType, header: Boolean = true, sep: String = ","): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${ident(name)}")
-    spark.sql(s"CREATE TABLE ${ident(name)} ${csvSource(path, schema, header, sep)}")
+    spark.sql(s"CREATE TABLE ${ident(name)} (${schema.toDDL}) USING csv " +
+      s"OPTIONS (header '$header', sep ${str(sep)}, path ${str(path)})")
   }
-
-  /** [[createExternalCsv]] as a temporary view: the same DDL, but the name
-    * is bound in this session only, not in the shared catalog, so another
-    * session on the same catalog can bind it to other files at the same
-    * time.
-    */
-  def createTempCsv(spark: SparkSession, name: String, path: String,
-      schema: StructType, header: Boolean = true, sep: String = ","): Unit =
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${ident(name)} " +
-      csvSource(path, schema, header, sep))
-
-  private def csvSource(path: String, schema: StructType, header: Boolean,
-      sep: String): String =
-    s"(${schema.toDDL}) USING csv " +
-      s"OPTIONS (header '$header', sep ${str(sep)}, path ${str(path)})"
 
   /** External parquet table over `path` (schema from the footers). */
   def createExternalParquet(spark: SparkSession, name: String, path: String): Unit = {

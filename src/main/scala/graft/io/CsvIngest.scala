@@ -96,6 +96,18 @@ object CsvIngest {
     (df.schema, ResultStore.overwriteCounted(df, out))
   }
 
+  /** The CSV at `path` with its columns bound by header name, as the
+    * other routes here bind them (raw headers normalized, unit metadata
+    * attached), but with the table semantics of a plain external CSV: no
+    * row is dropped and a malformed field reads as null. The columns come
+    * in the file's order.
+    */
+  def readCsvByHeader(spark: SparkSession, path: String,
+      schema: StructType): DataFrame = {
+    val (df0, rawNames) = parse(spark, path, schema)
+    normalized(df0, rawNames)
+  }
+
   /** The raw scan: every column typed as `schema` declares it under its
     * raw header, plus the `_corrupt` marker, which is set on a row when
     * any field the query parses is malformed. Returns it with the raw

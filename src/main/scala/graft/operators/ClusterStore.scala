@@ -292,29 +292,13 @@ object ClusterStore {
     ()
   }
 
-  /** Batches at or under this many docs run the apply's subgraph CC on
-    * the DRIVER (collected union-find) instead of the iterative
-    * distributed CC. The subgraph is batch-bound BY CONSTRUCTION — hubs
-    * are unique per (window, fingerprint), so edges ≤ windows × batch
-    * rows, endpoints ≤ 2 × edges — which makes the collect ≤ a few MB at
-    * this threshold, while the distributed path's ~50 extra Spark jobs
-    * (iteration rounds, checkpoints, AQE stages) cost seconds of pure
-    * scheduling per apply: the round-9 probe measured a flat-but-large
-    * ~3.5-3.9 s per-batch constant that was almost entirely job count.
-    * Corpus-scale applies keep the distributed path. Overridable per
-    * session via `spark.graft.cc.driverMaxBatch` (the equivalence law in
-    * ClusterStoreSpec pins both paths to identical generations by
-    * forcing it to 0). */
-  val DriverCcMaxBatch = 200000L
-
-  private def driverCcMax(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.driverMaxBatch")
-      .map(_.toLong).getOrElse(DriverCcMaxBatch)
-
   /** The edge derivation + subgraph CC + generation commit of [[ccApply]]
     * (split out so the checkpoint releases wrap it on every path).
-    * Batches at or under [[DriverCcMaxBatch]] docs take the collected
-    * union-find path; larger ones the iterative distributed CC. */
+    * Batches at or under [[Components.DriverCcMaxBatch]] docs take the
+    * collected union-find path; larger ones the iterative distributed CC.
+    * The subgraph is batch-bound by construction — hubs are unique per
+    * (window, fingerprint), so edges ≤ windows × batch rows and endpoints
+    * ≤ 2 × edges — so the batch's doc count bounds the collect. */
   private def applyBody(spark: SparkSession, path: String, fps: DataFrame,
       b: DataFrame, nBuckets: Int, committed: Seq[String],
       nDocs: Long): Unit = {
@@ -334,7 +318,7 @@ object ClusterStore {
       .union(novel.join(newHubs, Seq("w", "fp"))
         .select(col("id").as("src"), col("dst")))
       .filter(col("src") =!= col("dst"))
-    if (nDocs <= driverCcMax(spark)) {
+    if (nDocs <= Components.driverCcMax(spark)) {
       applyBodyDriver(spark, path, edgePlan, b, nBuckets, committed,
         gen, newHubs, nDocs)
       newHubs.unpersist()
@@ -449,33 +433,14 @@ object ClusterStore {
       }
     // union-find over batch vertices + endpoint stars, labelling each
     // component with its MINIMUM member (the served-label invariant)
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-      var c = x
-      while (parent.getOrDefault(c, c) != c) {
-        val nxt = parent.get(c); parent.put(c, r); c = nxt
-      }
-      r
-    }
-    def union(a: Long, bb: Long): Unit = {
-      val (ra, rb) = (find(a), find(bb))
-      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-    }
-    idArr.foreach(v => parent.putIfAbsent(v, v))
-    endpoints.foreach(v => parent.putIfAbsent(v, v))
-    epLab.foreach { case (id, root) =>
-      parent.putIfAbsent(root, root); union(id, root)
-    }
-    edgeArr.foreach { case (s, d) => union(s, d) }
-    // linking max→min keeps every root the component minimum already;
-    // find() after all unions resolves the chains
-    val batchLabels = idArr.toSeq.map(id => (id, find(id)))
+    val uf = new Components.UnionFind
+    epLab.foreach { case (id, root) => uf.union(id, root) }
+    edgeArr.foreach { case (s, d) => uf.union(s, d) }
+    val batchLabels = idArr.toSeq.map(id => (id, uf.find(id)))
       .toDF("id", "cluster_id")
     // merge ledger delta: old roots whose component got a smaller min
     val delta = epLab.map(_._2).distinct
-      .map(r => (r, find(r))).filter { case (o, nw) => o != nw }
+      .map(r => (r, uf.find(r))).filter { case (o, nw) => o != nw }
     val deltaDf = delta.toSeq.toDF("d_old", "d_new")
     val remap = readRemap(spark, path, committed)
     val newRemap = remap

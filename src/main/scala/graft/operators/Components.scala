@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import scala.collection.mutable
 
 /** Connected components over a pair relation — duplicate-CLUSTER resolution,
   * the step after candidate-pair generation that every production dedup
@@ -37,35 +40,144 @@ import org.apache.spark.sql.functions._
   * expensive than the extra write). Each round's superseded labels are
   * unpersisted once the next round's checkpoint materializes, so executor
   * storage stays O(|V| + |E|), not O(rounds).
+  *
+  * Small graphs never enter the rounds. When the vertex and edge inputs
+  * each hold at most [[DriverCcMaxBatch]] rows, both entry points collect
+  * them and label every component with one driver-side min-label
+  * [[UnionFind]] (the kernel [[ClusterStore]]'s batch apply shares),
+  * returning a local relation. The rounds are almost all framework
+  * overhead at that size: every round plans fresh join/aggregate shapes,
+  * and a dedup query's handful of CC calls generates more classes than
+  * Spark's 100-entry generated-class cache holds, so each warm run
+  * recompiled them. q128 (500 documents, 4 cores, `graft.tools.Probe
+  * profile`) ran 31 jobs and Janino-compiled 105 classes per warm run on
+  * the rounds; on this path, with its corpus fingerprinted once, it runs
+  * 14 jobs and compiles none. The collect is bounded by the same
+  * constant, a few MB at 200,000 rows of two longs.
   */
 object Components {
 
-  /** Min-label propagation with an alternating-star escape. `vertices`:
-    * one `id` column; `edges`: (`src`, `dst`) — direction ignored,
-    * self-loops dropped. Returns (id, cluster_id) where cluster_id = min
-    * id reachable from `id`.
+  /** Vertex and edge inputs of at most this many rows each are labelled on
+    * the driver by [[UnionFind]] instead of the distributed rounds (by
+    * [[connectedComponents]], [[connectedComponentsIncremental]] and
+    * [[ClusterStore]]'s batch apply). At this size a collected graph is a
+    * few MB, while the rounds cost seconds of job scheduling and class
+    * generation whatever the graph's size: the round-9 probe measured a
+    * flat ~3.5-3.9 s per store apply that was almost all job count.
+    * Overridable per session via `spark.graft.cc.driverMaxBatch`; 0 turns
+    * the driver path off (the equivalence laws in ComponentsSpec and
+    * ClusterStoreSpec pin the distributed path that way). */
+  val DriverCcMaxBatch = 200000L
+
+  private[operators] def driverCcMax(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.cc.driverMaxBatch")
+      .map(_.toLong).getOrElse(DriverCcMaxBatch)
+
+  /** Min-label union-find over long ids. Linking the larger root under the
+    * smaller keeps every root its component's minimum id, so [[find]] is
+    * the min-label the distributed rounds converge to; `find` compresses
+    * the path it walks. */
+  private[operators] final class UnionFind {
+    private val parent = mutable.LongMap.empty[Long]
+
+    def add(v: Long): Unit = if (!parent.contains(v)) parent(v) = v
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      add(a); add(b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+
+    /** Every id added so far, by itself or through an edge. */
+    def ids: Array[Long] = parent.keysIterator.toArray
+  }
+
+  private val labelSchema = new StructType()
+    .add("id", LongType).add("cluster_id", LongType)
+
+  private def idOf(r: Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+  /** The rows of a pinned frame if it holds at most `max` of them, read as
+    * at most `max` + 1 rows of its blocks; None when over the bound or when
+    * `max` ≤ 0 (the driver path turned off). */
+  private def rowsUpTo(pinned: DataFrame, max: Long): Option[Array[Row]] =
+    if (max <= 0L) None
+    else {
+      val rows = pinned.limit(math.min(max, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length <= max) Some(rows) else None
+    }
+
+  /** The small-graph labelling: the (id, cluster_id) rows the distributed
+    * rounds return for the same graph. Every id of a component that holds
+    * a vertex is emitted once, edge endpoints outside `vertices` included,
+    * labelled with the component's smallest VERTEX id (the rounds start
+    * labels at vertices only); a component without a vertex is not
+    * emitted; a null vertex id gives one (null, null) row, as the rounds'
+    * group-by does. */
+  private def labelLocally(vertices: Seq[Option[Long]],
+      edges: Seq[(Long, Long)]): Seq[Row] = {
+    val uf = new UnionFind
+    edges.foreach { case (a, b) => uf.union(a, b) }
+    val vs = vertices.flatten
+    vs.foreach(uf.add)
+    val minVertex = mutable.LongMap.empty[Long]
+    vs.foreach { v =>
+      val r = uf.find(v)
+      if (minVertex.get(r).forall(v < _)) minVertex(r) = v
+    }
+    val labelled = uf.ids.toSeq.flatMap { id =>
+      minVertex.get(uf.find(id)).map(l => Row(id, l))
+    }
+    if (vertices.contains(None)) labelled :+ Row(null, null) else labelled
+  }
+
+  private def localFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), labelSchema)
+
+  /** Connected components: min-label propagation with an alternating-star
+    * escape, or the driver [[UnionFind]] for small graphs. `vertices`: one
+    * `id` column; `edges`: (`src`, `dst`) — direction ignored, self-loops
+    * dropped. Returns (id, cluster_id) where cluster_id = the min vertex id
+    * reachable from `id`.
     *
-    * Propagation runs up to min(`starAfter`, `maxIter`) rounds; if the
-    * fixpoint is not reached and budget remains, the Kiveris alternating
-    * large-star/small-star phase takes over (seeded with the propagation
-    * progress) for up to `maxIter` rounds of its own. Throws — rather
-    * than returning an under-merged labelling — only if even the star
-    * phase fails to converge (or `maxIter` ≤ `starAfter` left it no room,
-    * the strict fail-fast configuration).
+    * Path choice: the canonical edge frame is pinned once (as the rounds
+    * need it anyway) and at most [[DriverCcMaxBatch]] + 1 of its rows are
+    * read; only if the edges are within the bound is the vertex side
+    * (pinned lazily) read the same way. Within both bounds the collected graph
+    * is labelled by [[UnionFind]] and returned as a local relation. A
+    * graph over a bound pays one partial read of pinned blocks and runs
+    * the rounds over the same pins, so the upstream plans (LSH verify for
+    * q108, corpus fingerprinting for q101/q128) are evaluated once on
+    * either path.
+    *
+    * The rounds: propagation runs up to min(`starAfter`, `maxIter`)
+    * rounds; if the fixpoint is not reached and budget remains, the
+    * Kiveris alternating large-star/small-star phase takes over (seeded
+    * with the propagation progress) for up to `maxIter` rounds of its own.
+    * Throws — rather than returning an under-merged labelling — only if
+    * even the star phase fails to converge (or `maxIter` ≤ `starAfter` left
+    * it no room, the strict fail-fast configuration). `maxIter` and
+    * `starAfter` bound only these rounds: union-find always converges, so
+    * a small graph never fails fast.
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 20, starAfter: Int = 8): DataFrame = {
     require(maxIter >= 1, "need maxIter >= 1")
     require(starAfter >= 1, "need starAfter >= 1")
+    val spark = vertices.sparkSession
+    val maxSmall = driverCcMax(spark)
     // undirected, deduped, self-loop-free; materialized once — every round
     // re-reads this, so it must not re-derive from the (possibly expensive)
-    // candidate-pair plan each time
-    val und = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(array_min(array(col("src"), col("dst"))).as("src"),
-        array_max(array(col("src"), col("dst"))).as("dst"))
-      .distinct()
+    // candidate-pair plan each time.
     // EAGER: the candidate-edge plan (often the query's heaviest compute —
     // LSH verify for q108, corpus fingerprinting for q101/q128) executes
     // here, under the session's normal adaptive planning, as its own job;
@@ -73,11 +185,25 @@ object Components {
     // checkpointed blocks. `labels`/`next` stay LAZY (the Packing
     // pattern): each round's fixpoint aggregate is the round's ONLY
     // driver action and materializes that round's blocks itself.
-    val both = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val und = edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .select(array_min(array(col("src"), col("dst"))).as("src"),
+        array_max(array(col("src"), col("dst"))).as("dst"))
+      .distinct()
       .localCheckpoint()
+    // lazy: the bound read below (small edge sets) or the first round's
+    // fingerprint (large ones) materializes it, once
+    val vs = vertices.select(col("id").cast("long").as("id")).localCheckpoint(false)
+    val small = for {
+      es <- rowsUpTo(und, maxSmall)
+      vr <- rowsUpTo(vs, maxSmall)
+    } yield localFrame(spark, labelLocally(vr.toSeq.map(idOf(_, 0)),
+      es.toSeq.map(r => (r.getLong(0), r.getLong(1)))))
+    small.foreach { out => und.unpersist(); vs.unpersist(); return out }
 
-    var labels = vertices.select(col("id").cast("long").as("id"),
-      col("id").cast("long").as("label")).localCheckpoint(false)
+    val both = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    var labels = vs.select(col("id"), col("id").as("label"))
     // Per-vertex labels only ever DECREASE (next = min(own, neighbours')),
     // and next's id set is always a SUPERSET of labels' (labels is unioned
     // in), so: equal row count ⟹ same id set, and then equal label-sum ⟹
@@ -98,7 +224,7 @@ object Components {
     var escaped: Option[DataFrame] = None
     // a round shuffles ≤ |V| + 2|E| label rows and star edges bound
     // |E| ≤ |V|, so ~3·|V| rows (see FixpointExec for the policy)
-    FixpointExec.staticRounds(vertices.sparkSession, 3L * prevFp._1, 24L) {
+    FixpointExec.staticRounds(spark, 3L * prevFp._1, 24L) {
       while (!converged && round < math.min(maxIter, starAfter)) {
         val viaNeighbour = both.join(labels, both("src") === labels("id"))
           .select(both("dst").as("id"), col("label"))
@@ -117,11 +243,10 @@ object Components {
         // monotone-decrease invariant, so already canonical) compress every
         // hop propagation already traversed; connectivity is preserved
         // because a vertex's label is always an id inside its own component.
-        // The base edges come from the CHECKPOINTED `both` (one direction),
-        // never from `und` — seeding from `und` would re-execute the
-        // possibly-expensive upstream candidate-pair plan exactly when the
-        // job is already on its slow path
-        val seed = both.filter(col("src") < col("dst")).union(
+        // The base edges are the CHECKPOINTED `und`, so the possibly-
+        // expensive upstream candidate-pair plan is not re-executed exactly
+        // when the job is already on its slow path
+        val seed = und.union(
           labels.filter(col("label") =!= col("id"))
             .select(col("label").as("src"), col("id").as("dst")))
           .distinct()
@@ -131,17 +256,18 @@ object Components {
             Seq("id"), "left_outer")
           .select(col("id"), coalesce(col("__lab"), col("id")).as("cluster_id"))
         labels.unpersist()
-        both.unpersist()
+        und.unpersist()
         escaped = Some(out)
       }
     }
+    vs.unpersist()
     escaped.foreach(out => return out)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds — graph has " +
           "a longer path structure than a dedup pair graph should; raise " +
           "maxIter above starAfter to enable the large-star/small-star escape")
-    both.unpersist()
+    und.unpersist()
     labels.withColumnRenamed("label", "cluster_id")
   }
 
@@ -164,6 +290,16 @@ object Components {
     * A new edge bridging two giant old components still converges in few
     * rounds because each component is a depth-1 star.
     *
+    * Small inputs: the three inputs are pinned once each; the batch-bound
+    * ones (`newEdges`, then `newVertices`) are tested against
+    * [[DriverCcMaxBatch]] first, then `oldLabels`, each by reading at most
+    * bound + 1 rows. When all three are within it, the same subgraph is
+    * built from the collected rows and labelled by the driver
+    * [[UnionFind]], and the result is a local relation. Otherwise the
+    * distributed shape above runs over the same pins (and its subgraph CC
+    * takes the small path of [[connectedComponents]] when the subgraph is
+    * small). `maxIter` and `starAfter` bound only the distributed rounds.
+    *
     * Correctness: an untouched cluster has no edge to the batch (none of
     * its members is an endpoint), so its component — and its min-id label
     * — is unchanged by the union graph. A touched cluster enters with its
@@ -178,14 +314,28 @@ object Components {
   def connectedComponentsIncremental(oldLabels: DataFrame,
       newVertices: DataFrame, newEdges: DataFrame,
       maxIter: Int = 20, starAfter: Int = 8): DataFrame = {
-    val old = oldLabels.select(col("id").cast("long").as("id"),
-      col("cluster_id").cast("long").as("cluster_id"))
+    val spark = oldLabels.sparkSession
+    val maxSmall = driverCcMax(spark)
     // checkpointed (not explicitly unpersisted — the returned frame is
     // lazy and still reads these blocks; the ContextCleaner reclaims them
     // once the caller drops the result): the possibly-expensive candidate
-    // edge plan is evaluated once for the endpoint probe and the CC seed
+    // edge plan is evaluated once for the bound read, the endpoint probe
+    // and the CC seed
     val newE = newEdges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).localCheckpoint(false)
+    val newV = newVertices.select(col("id").cast("long").as("id"))
+      .localCheckpoint(false)
+    val old = oldLabels.select(col("id").cast("long").as("id"),
+      col("cluster_id").cast("long").as("cluster_id")).localCheckpoint(false)
+    val small = for {
+      e <- rowsUpTo(newE, maxSmall)
+      v <- rowsUpTo(newV, maxSmall)
+      o <- rowsUpTo(old, maxSmall)
+    } yield absorbLocally(spark, o, v, e)
+    small.foreach { out =>
+      Seq(newE, newV, old).foreach(_.unpersist()); return out
+    }
+
     val endpoints = newE.select(col("src").as("id"))
       .union(newE.select(col("dst").as("id"))).distinct()
     val touched = old.join(endpoints, Seq("id"), "left_semi")
@@ -194,7 +344,7 @@ object Components {
       .localCheckpoint(false)
     val vertices = members.select(col("id"))
       .union(endpoints)
-      .union(newVertices.select(col("id").cast("long").as("id")))
+      .union(newV)
       .distinct()
     val labelEdges = members.filter(col("id") =!= col("cluster_id"))
       .select(col("cluster_id").as("src"), col("id").as("dst"))
@@ -203,6 +353,31 @@ object Components {
     val untouched = old.join(touched, Seq("cluster_id"), "left_anti")
       .select(col("id"), col("cluster_id"))
     untouched.unionByName(sub.select(col("id"), col("cluster_id")))
+  }
+
+  /** [[connectedComponentsIncremental]]'s affected-subgraph shape over
+    * collected rows: the same touched clusters, members, label edges and
+    * untouched pass-through (null keys match nothing, as in the joins),
+    * with the subgraph labelled by [[labelLocally]]. */
+  private def absorbLocally(spark: SparkSession, old: Array[Row],
+      newV: Array[Row], newE: Array[Row]): DataFrame = {
+    val endpoints = newE.flatMap(r => Seq(idOf(r, 0), idOf(r, 1))).distinct
+    val hit = endpoints.flatten.toSet
+    val touched = old.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) && hit(r.getLong(0)) => r.getLong(1)
+    }.toSet
+    val (members, untouched) =
+      old.partition(r => !r.isNullAt(1) && touched(r.getLong(1)))
+    val labelEdges = members.collect {
+      case r if !r.isNullAt(0) && r.getLong(0) != r.getLong(1) => (r.getLong(1), r.getLong(0))
+    }
+    val batchEdges = newE.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+    }
+    val sub = labelLocally(
+      (members.map(idOf(_, 0)) ++ endpoints ++ newV.map(idOf(_, 0))).toSeq,
+      (labelEdges ++ batchEdges).toSeq)
+    localFrame(spark, untouched.toSeq ++ sub)
   }
 
   /** Alternating large-star/small-star rounds (Kiveris et al., "Connected
@@ -270,7 +445,7 @@ object Components {
     * separately). The raw material of [[fingerprintEdges]] and the
     * persisted hub table ([[ClusterStore]]).
     */
-  private[operators] def fingerprintRows(docs: DataFrame, idCol: String,
+  def fingerprintRows(docs: DataFrame, idCol: String,
       textCol: String, windows: Seq[(Int, Int)]): DataFrame = {
     require(windows.nonEmpty && windows.forall { case (a, b) => a >= 1 && b >= a })
     val toks = docs.select(col(idCol).cast("long").as("id"),
@@ -292,11 +467,19 @@ object Components {
     * middle window chain into one cluster.
     */
   def fingerprintEdges(docs: DataFrame, idCol: String, textCol: String,
-      windows: Seq[(Int, Int)] = Seq((1, 8), (5, 12))): DataFrame = {
-    val fp = fingerprintRows(docs, idCol, textCol, windows)
-    val hubs = fp.groupBy("w", "fp").agg(min("id").as("dst"))
-    fp.join(hubs, Seq("w", "fp"))
-      .select(col("id").as("src"), col("dst"))
+      windows: Seq[(Int, Int)] = Seq((1, 8), (5, 12))): DataFrame =
+    starEdges(fingerprintRows(docs, idCol, textCol, windows))
+
+  /** The star edges of [[fingerprintRows]] output: (src = id, dst = the min
+    * id of its (w, fp) group), self-edges dropped. A window min over the
+    * group gives the rows a hub aggregate joined back to the fingerprints
+    * would, with one shuffle and no self-join; a caller holding pinned
+    * fingerprint rows (q128) derives several edge sets from one
+    * evaluation. */
+  def starEdges(fp: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    fp.select(col("id").as("src"),
+        min(col("id")).over(Window.partitionBy(col("w"), col("fp"))).as("dst"))
       .filter(col("src") =!= col("dst"))
   }
 

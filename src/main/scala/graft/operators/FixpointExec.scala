@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Execution policy for iterative fixpoint loops (connected components,
-  * PageRank): run the loop's planning AND actions with adaptive query
+/** Execution policy for the iterative rounds of connected components
+  * ([[Components]]): run the loop's planning AND actions with adaptive query
   * execution off and a data-derived shuffle width, restoring the session
   * conf after.
   *
@@ -21,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   * regimes beyond that). Callers keep the EXPENSIVE upstream plan (LSH
   * verify, corpus fingerprinting) OUT of the scope by checkpointing it
   * eagerly first, so it still plans adaptively.
+  *
+  * Graphs within [[Components.DriverCcMaxBatch]] never reach this scope:
+  * [[Components]] labels them with a driver union-find, so at dedup-query
+  * sizes no round is planned and no conf is set; only larger graphs run
+  * their rounds here.
   */
 private[operators] object FixpointExec {
 

@@ -264,16 +264,19 @@ object StoreQueries {
     // through by one anti-join. (The hub-edge filter keeps connectivity
     // for ANY split: a group's batch members link to the global hub; if
     // that hub is old it IS the old group's min, already the old
-    // cluster's label.) The oracle is the full-corpus recursive-CTE
-    // clustering — incremental must be indistinguishable from batch.
+    // cluster's label.) The corpus is fingerprinted once and pinned; the
+    // old corpus's star edges and the batch's edges both derive from
+    // that pin. The oracle is the full-corpus recursive-CTE clustering —
+    // incremental must be indistinguishable from batch.
     ("q128_cc_incremental", (s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
-      val olds = docs.filter(col("doc_id") % 10 =!= 0)
+      val fps = Components.fingerprintRows(docs, "doc_id", "text",
+        Seq((1, 8), (5, 12))).localCheckpoint()
       val oldCC = Components.connectedComponents(
-        olds.select(col("doc_id").as("id")),
-        Components.fingerprintEdges(olds, "doc_id", "text"))
-      val newEdges = Components.fingerprintEdges(docs, "doc_id", "text")
+        docs.filter(col("doc_id") % 10 =!= 0).select(col("doc_id").as("id")),
+        Components.starEdges(fps.filter(col("id") % 10 =!= 0)))
+      val newEdges = Components.starEdges(fps)
         .filter(col("src") % 10 === 0 || col("dst") % 10 === 0)
       Components.connectedComponentsIncremental(oldCC,
         docs.filter(col("doc_id") % 10 === 0).select(col("doc_id").as("id")),

@@ -130,4 +130,19 @@ class WeatherRunnerSpec extends AnyFunSuite {
     }
     assert(rows(dirs(0), "top_temperate_cities") !== rows(dirs(1), "top_temperate_cities"))
   }
+
+  test("the HQL surface binds CSV columns by header name, not by position") {
+    // the same weather rows with the columns in reverse order: the ingest
+    // maps them by header, and the HQL table must see the same fields
+    val dir = fixture()
+    val path = java.nio.file.Path.of(s"$dir/weather.csv")
+    val lines = Files.readAllLines(path)
+    Files.write(path, java.util.Arrays.asList(lines.toArray(new Array[String](0))
+      .map(_.split(",", -1).reverse.mkString(",")): _*))
+    val counts = WeatherRunner.runAll(spark, s"$dir/weather.csv", s"$dir/locations.csv", s"$dir/out")
+    assert(counts("top_temperate_cities") === 2)
+    def rows(t: String) = spark.read.parquet(s"$dir/out/$t")
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
+    assert(rows("top_temperate_cities_hql") === rows("top_temperate_cities"))
+  }
 }
